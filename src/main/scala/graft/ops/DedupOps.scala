@@ -90,7 +90,14 @@ object DedupOps {
     * small scale broadcast the TEXT side twice; this shape scans it once and
     * shuffles only candidate-member texts — pairs are a sliver of the corpus,
     * so the heavy bytes move once (ids are unique per the dedup-family
-    * contract: signatures, components and keepers are all per-id). */
+    * contract: signatures, components and keepers are all per-id).
+    *
+    * Duplicate input ids are NOT surfaced: the pivot's `max(when(side))`
+    * collapses every text attached to one id to a single (lexicographic-max)
+    * text per side, where the two-join form multiplied the pair rows. A
+    * corpus that breaks the unique-id contract therefore verifies each pair
+    * against one arbitrary text of each id, silently — check id uniqueness
+    * upstream; a duplicate-id regression will not show in this output. */
   def verifiedNearDupPairs(df: DataFrame, textCol: String, idCol: String,
                            threshold: Double = 0.8,
                            candidateThreshold: Double = 0.5, shingleSize: Int = 3,

@@ -310,8 +310,9 @@ object CurationPipeline {
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("bucket")
         .parquet(curatedPath)
-      // lineage from the WRITTEN files — fingerprint what landed, not the plan
-      val written = spark.read.parquet(curatedPath).filter(col("bucket").isin(group: _*))
+      // lineage from the WRITTEN files — fingerprint what landed, not the plan;
+      // only this group's bucket dirs, with the written schema
+      val written = ExtractPipeline.readBuckets(spark, curatedPath, bucketed.schema, group)
       written.groupBy(col("bucket"))
         .agg(count(lit(1)).as("row_count"),
           sha2(encode(concat_ws("\n", sort_array(collect_list(

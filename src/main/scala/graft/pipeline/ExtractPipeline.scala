@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.{extract_doc, is_pdf, pdf_preflight, text_digest, url_host}
 
@@ -12,11 +13,11 @@ import graft.functions.{extract_doc, is_pdf, pdf_preflight, text_digest, url_hos
  * Dataflow mirrors the reference CLI lifecycle (ocr_combined.py:232-264) re-expressed
  * as one declarative plan:
  *
- *   pages ─ preflight ─┬─ quarantine table           (security_validator.py:309-335)
+ *   pages ─ preflight ─┬─ quarantine/bucket=K         (security_validator.py:309-335)
  *                      └─ mode filter (skip_text)     (ocr_combined.py:124-141)
  *                          └─ anti-join done buckets  (resume; archive-dedup analog :147-157)
  *                              └─ repartition(host, salt)  ← explicit skew handling
- *                                  └─ extract_any_text (ExtractMainContent | ParsePdfText)
+ *                                  └─ extract_doc (one parse: text | error | spans)
  *                                      └─ write extracted/bucket=K  +  lineage rows
  *
  * Scale design (10^12 docs): every decision is per-row or per-bucket; no driver
@@ -24,6 +25,13 @@ import graft.functions.{extract_doc, is_pdf, pdf_preflight, text_digest, url_hos
  * (pmod(xxhash64(url), nBuckets)) — they survive reruns and cluster-size changes,
  * which is what makes lineage rows a valid checkpoint unit. Physical parallelism
  * (shuffle partitions, executor count) is free to differ from nBuckets.
+ *
+ * Metadata work is O(group), not O(table): every read-back passes the schema
+ * the run already knows (no footer-inference job), a commit group reads back
+ * only its own existing `bucket=K` dirs (no listing of the other buckets), and
+ * the commit reads the lineage log once. Quarantine rows are clustered by
+ * bucket before the partitioned write, so a run writes at most one quarantine
+ * file per bucket instead of one per (input split × bucket).
  */
 object ExtractPipeline {
 
@@ -202,18 +210,33 @@ object ExtractPipeline {
         // never by run_id strings ('run-10' sorts before 'run-2' lexically)
         lit(System.currentTimeMillis()).as("committed_utc_ms"))
 
-  /** Lineage log reader tolerant of rows written by older engine versions:
-    * `committed_utc_ms` and `err_count` were added after the first release, so
-    * an outDir whose log predates them must still resume/compact — mergeSchema
-    * unions the file schemas and missing values default to 0 (epoch-0 commit
-    * stamps sort OLDEST, so any re-run supersedes a legacy row, which is the
-    * correct resume semantics for rows that predate the stamp). */
-  def readLineage(spark: SparkSession, lineagePath: String): DataFrame = {
-    val raw = spark.read.option("mergeSchema", "true").parquet(lineagePath)
-    def defaulted(df: DataFrame, c: String): DataFrame =
-      if (df.columns.contains(c)) df.withColumn(c, coalesce(col(c), lit(0L)))
-      else df.withColumn(c, lit(0L))
-    defaulted(defaulted(raw, "committed_utc_ms"), "err_count")
+  /** The lineage log's schema, in `lineage`'s column order. */
+  val LineageSchema: StructType = StructType.fromDDL(
+    "run_id STRING, bucket INT, row_count BIGINT, ok_count BIGINT, skipped_count BIGINT, " +
+      "err_count BIGINT, digest STRING, status STRING, committed_utc_ms BIGINT")
+
+  /** Lineage log reader with the known schema (no footer-inference job),
+    * tolerant of rows written by older engine versions: `committed_utc_ms`
+    * and `err_count` were added after the first release, so an outDir whose
+    * log predates them must still resume/compact — a column a file lacks
+    * reads as null and defaults to 0 (epoch-0 commit stamps sort OLDEST, so
+    * any re-run supersedes a legacy row, which is the correct resume
+    * semantics for rows that predate the stamp). Curation and frontier
+    * lineage logs carry no count columns; they read as null. */
+  def readLineage(spark: SparkSession, lineagePath: String): DataFrame =
+    spark.read.schema(LineageSchema).parquet(lineagePath)
+      .withColumn("err_count", coalesce(col("err_count"), lit(0L)))
+      .withColumn("committed_utc_ms", coalesce(col("committed_utc_ms"), lit(0L)))
+
+  /** The given buckets' `bucket=K` dirs under a bucket-partitioned table,
+    * read with the schema the writer used: no footer-inference job, and only
+    * those dirs are listed, so the metadata cost is O(buckets), not O(table).
+    * A bucket that got no rows has no dir and is left out. */
+  private[graft] def readBuckets(spark: SparkSession, tablePath: String, schema: StructType,
+                                 buckets: Seq[Int]): DataFrame = {
+    val dirs = buckets.map(b => s"$tablePath/$BucketCol=$b").filter(fsExists(spark, _))
+    if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).option("basePath", tablePath).parquet(dirs: _*)
   }
 
   final case class RunResult(
@@ -311,11 +334,26 @@ object ExtractPipeline {
     def notDone(df: DataFrame): DataFrame =
       if (nDone > 0) df.filter(!col(BucketCol).isin(doneBucketIds.toSeq: _*)) else df
 
+    val todoBuckets = (0 until cfg.nBuckets).filterNot(doneBucketIds.toSet)
+
     val (valid, quarantine) = validate(pages, cfg)
+    // quarantine rows cluster by bucket before the partitioned write: each
+    // partition owns one contiguous run of the not-done buckets, so a run
+    // writes at most one file per bucket, not one per (input split × bucket).
+    // Only the narrow quarantine rows cross this exchange; the scan and
+    // validation stay on the input splits
+    val qParts = math.max(1, math.min(todoBuckets.size,
+      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt))
+    val qPartOf = Array.fill(cfg.nBuckets)(0)
+    todoBuckets.zipWithIndex.foreach { case (b, i) =>
+      qPartOf(b) = (i.toLong * qParts / todoBuckets.size).toInt
+    }
     // dynamic partition overwrite keyed by bucket ⇒ reruns are idempotent per
     // bucket (exactly-once resume without a transactional catalog; the honest
     // Iceberg-snapshot substitution, SURVEY.md §7.0)
-    notDone(quarantine).write
+    notDone(quarantine)
+      .repartitionById(qParts, element_at(typedLit(qPartOf.toSeq), col(BucketCol) + 1))
+      .write
       .option("partitionOverwriteMode", "dynamic")
       .option("compression", cfg.parquetCodec)
       .mode(SaveMode.Overwrite)
@@ -333,7 +371,6 @@ object ExtractPipeline {
     // checkpoint-resume of failed partitions without recomputation).
     // Trade-off: G groups ⇒ G input scans (the bucket filter prunes extraction,
     // not the scan); at the 100 TB tier pick G so a group is O(1-4 TB).
-    val todoBuckets = (0 until cfg.nBuckets).filterNot(doneBucketIds.toSet)
     val groups: Seq[Seq[Int]] =
       if (cfg.commitGroups <= 1 || todoBuckets.isEmpty) Seq(todoBuckets)
       else {
@@ -357,9 +394,8 @@ object ExtractPipeline {
         .partitionBy(BucketCol)
         .parquet(extractedPath)
       // lineage from the written files (read-back guarantees we fingerprint what
-      // landed); isin on the partition column prunes other bucket dirs from the scan
-      val written = spark.read.parquet(extractedPath)
-        .filter(col(BucketCol).isin(group: _*))
+      // landed): only this group's bucket dirs, with the written schema
+      val written = readBuckets(spark, extractedPath, part.schema, group)
       lineage(written, cfg.runId).write.mode(SaveMode.Append).parquet(lineagePath)
       committed += 1
       audit("group_commit", "info",
@@ -371,40 +407,41 @@ object ExtractPipeline {
       }
     }
 
-    // snapshot manifest over ALL committed buckets (Iceberg-emulation commit record)
-    val allLineage = readLineage(spark, lineagePath)
+    // one read of the lineage log: the latest committed row per bucket (at most
+    // nBuckets rows) is both the snapshot manifest (Iceberg-emulation commit
+    // record over ALL committed buckets) and the source of the counters —
+    // metadata-sized, never a rescan of the output
+    val latest = readLineage(spark, lineagePath)
       .filter(col("status") === "committed")
       .groupBy(col(BucketCol))
-      .agg(max(struct(col("committed_utc_ms"), col("run_id"), col("row_count"), col("digest"))).as("latest"))
-      .select(col(BucketCol), col("latest.row_count"), col("latest.digest"))
+      .agg(max(struct(col("committed_utc_ms"), col("run_id"), col("row_count"), col("digest"),
+        col("ok_count"), col("skipped_count"), col("err_count"))).as("l"))
+      .select(col(BucketCol), col("l.row_count"), col("l.digest"),
+        col("l.ok_count"), col("l.skipped_count"), col("l.err_count"))
       .collect()
     // next id = numeric successor of the LATEST snapshot, never the manifest
     // COUNT — after retention expiry the count shrinks and a count-derived id
     // would sort before kept snapshots, breaking the lexicographic-commit-order
     // contract (latestSnapshot would resolve to a stale run)
-    val nextSeq = CatalogIO.latestSnapshot(spark, extractedPath)
+    val parentSnapshot = CatalogIO.latestSnapshot(spark, extractedPath)
+    val nextSeq = parentSnapshot
       .flatMap(id => """snap-(\d+)""".r.findFirstMatchIn(id).map(_.group(1).toInt + 1))
       .getOrElse(0)
     val snapshotId = f"snap-$nextSeq%06d-${cfg.runId}"
     CatalogIO.writeSnapshot(spark, extractedPath, CatalogIO.Snapshot(
       snapshotId = snapshotId,
       runId = cfg.runId,
-      parent = CatalogIO.latestSnapshot(spark, extractedPath).getOrElse(""),
+      parent = parentSnapshot.getOrElse(""),
       createdUtcMs = System.currentTimeMillis(),
-      buckets = allLineage.map(r =>
+      buckets = latest.map(r =>
         CatalogIO.BucketEntry(r.getInt(0), r.getLong(1), r.getString(2))).toSeq.sortBy(_.bucket)))
 
-    // counters come from lineage (metadata-sized), never a rescan of the output
-    val linSums = readLineage(spark, lineagePath)
-      .filter(col("status") === "committed")
-      .groupBy(col(BucketCol))
-      .agg(max(struct(col("committed_utc_ms"), col("run_id"),
-        col("ok_count"), col("skipped_count"), col("err_count"))).as("l"))
-      .agg(sum(col("l.ok_count")), sum(col("l.skipped_count")), sum(col("l.err_count"))).collect()(0)
-    val nExtracted = if (linSums.isNullAt(0)) 0L else linSums.getLong(0)
-    val nSkipped = if (linSums.isNullAt(1)) 0L else linSums.getLong(1)
-    val nErrors = if (linSums.isNullAt(2)) 0L else linSums.getLong(2)
-    val q = try spark.read.parquet(quarantinePath).count() catch { case _: Exception => 0L }
+    def total(i: Int): Long = latest.map(r => if (r.isNullAt(i)) 0L else r.getLong(i)).sum
+    val nExtracted = total(3)
+    val nSkipped = total(4)
+    val nErrors = total(5)
+    val q = try spark.read.schema(quarantine.schema).parquet(quarantinePath).count()
+      catch { case _: Exception => 0L }
     val wallSec = (System.nanoTime() - t0) / 1e9
 
     // jobs table row (reference OCRJob analog, database_manager.py:42-84)

@@ -64,7 +64,7 @@ object FrontierPipeline {
         .mode(SaveMode.Overwrite)
         .partitionBy("bucket")
         .parquet(frontierPath)
-      val written = readFrontier().filter(col("bucket").isin(group: _*))
+      val written = ExtractPipeline.readBuckets(spark, frontierPath, bucketed.schema, group)
       // one lineage row PER BUCKET IN THE GROUP, including empty ones (a
       // converged crawl round discovers nothing): an empty bucket with no
       // committed row would be "missing" to every later resume, which

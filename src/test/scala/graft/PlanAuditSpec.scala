@@ -145,9 +145,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     val pairs =
       try {
         val p = ops.DedupOps.nearDupPairs(docs, "text", "doc_id", 0.5)
-        val deadline = System.nanoTime() + 10e9.toLong
-        while (jobs.get() < 1 && System.nanoTime() < deadline) Thread.sleep(20)
-        Thread.sleep(200) // allow any EXTRA construction-time jobs to surface
+        drainListenerBus() // construction-time jobs, extra ones included
         p
       } finally spark.sparkContext.removeSparkListener(listener)
     // construction runs exactly ONE job — the localCheckpoint materialization
@@ -233,9 +231,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
         // them again.
         val p = ops.SimilarityOps.embeddingNearDupPairs(
           emb, "embedding", "vec_id", threshold = 0.9, approxRows = 300)
-        val deadline = System.nanoTime() + 10e9.toLong
-        while (jobs.get() < 2 && System.nanoTime() < deadline) Thread.sleep(20)
-        Thread.sleep(200) // allow any EXTRA construction-time jobs to surface
+        drainListenerBus() // construction-time jobs, extra ones included
         p
       } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get() <= 3,

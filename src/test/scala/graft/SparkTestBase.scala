@@ -7,6 +7,13 @@ import org.scalatest.Suite
   * sequentially in the forked test JVM). */
 trait SparkTestBase { this: Suite =>
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** Waits until every Spark listener has seen every event posted so far
+    * (a bounded poll of the listener bus, not a fixed sleep). An action's
+    * job and stage start events are posted before it returns, so a listener
+    * read after this sees all of them. */
+  def drainListenerBus(timeoutMs: Long = 30000L): Unit =
+    org.apache.spark.graft.ListenerBusBridge.drain(spark.sparkContext, timeoutMs)
 }
 
 object SparkTestBase {

@@ -129,7 +129,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
       stages.set(0)
       val got = GraphOps.pageRank(e, "src", "dst", iters = 25, convergeDelta = delta)
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-      Thread.sleep(500) // listener bus drain (single-digit-ms in practice)
+      drainListenerBus()
       spark.sparkContext.removeSparkListener(listener)
       (got, stages.get())
     }
@@ -178,7 +178,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     val e = Seq(("a", "b")).toDF("src", "dst").localCheckpoint(true)
     spark.sparkContext.addSparkListener(listener)
     val ranks = GraphOps.pageRank(e, "src", "dst", iters = 1, redistributeDangling = true)
-    Thread.sleep(500) // listener bus drain
+    drainListenerBus()
     spark.sparkContext.removeSparkListener(listener)
     assert(probes.isEmpty,
       s"dangling-mass probes $probes fired for a 1-iteration run (expected none: " +
@@ -188,7 +188,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     probes.clear()
     spark.sparkContext.addSparkListener(listener)
     GraphOps.pageRank(e, "src", "dst", iters = 2, redistributeDangling = true).count()
-    Thread.sleep(500)
+    drainListenerBus()
     spark.sparkContext.removeSparkListener(listener)
     assert(probes.size() == 1,
       s"dangling-mass probes $probes for a 2-iteration run (expected exactly it=1's)")

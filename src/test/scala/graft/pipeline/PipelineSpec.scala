@@ -255,6 +255,92 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(runs == Set("g1", "g2"))
   }
 
+  /** Latest committed (bucket → (row_count, digest)) of an output dir. */
+  private def latestLineage(out: String): Map[Int, (Long, String)] =
+    ExtractPipeline.readLineage(spark, s"$out/lineage")
+      .filter(col("status") === "committed")
+      .groupBy(col("bucket"))
+      .agg(max(struct(col("committed_utc_ms"), col("run_id"), col("row_count"), col("digest"))).as("l"))
+      .select(col("bucket"), col("l.row_count"), col("l.digest")).collect()
+      .map(r => r.getInt(0) -> (r.getLong(1), r.getString(2))).toMap
+
+  private def urlDigests(out: String): Seq[(String, String)] =
+    spark.read.parquet(s"$out/extracted").select("url", "text_sha256").collect()
+      .map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+
+  /** Parquet files per `quarantine/bucket=K` dir. */
+  private def quarantineFilesPerBucket(out: String): Map[String, Int] =
+    Option(new java.io.File(s"$out/quarantine").listFiles()).getOrElse(Array.empty)
+      .filter(d => d.isDirectory && d.getName.startsWith("bucket="))
+      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+
+  test("crash + resume with empty buckets: group read-back skips missing dirs, byte-identical") {
+    val cfg = ExtractPipeline.Config(mode = "cli", runId = "eb0", nBuckets = 64, commitGroups = 4)
+    val ref = tmp()
+    ExtractPipeline.run(spark, Corpus.pages(spark, 20), ref, cfg)
+    val out = tmp()
+    intercept[IllegalStateException] {
+      ExtractPipeline.run(spark, Corpus.pages(spark, 20), out,
+        cfg.copy(runId = "eb1", failAfterGroups = Some(2)))
+    }
+    val res = ExtractPipeline.run(spark, Corpus.pages(spark, 20), out, cfg.copy(runId = "eb2"))
+    assert(res.resumedBuckets > 0, res)
+    // 20 docs over 64 buckets: most buckets got no rows and have no dir
+    val bucketDirs = new java.io.File(res.extractedPath).listFiles().count(_.getName.startsWith("bucket="))
+    assert(bucketDirs < 32, s"$bucketDirs bucket dirs: the run must leave empty buckets dirless")
+    assert(res.extracted + res.skipped + res.quarantined == 20, res)
+    assert(urlDigests(out) == urlDigests(ref))
+    assert(latestLineage(out) == latestLineage(ref))
+    assert(latestLineage(out).size == bucketDirs)
+  }
+
+  test("quarantine write clusters by bucket: one parquet file per quarantine/bucket=K dir") {
+    val out = tmp()
+    // 7 input splits: an unclustered write would emit up to 7 files per bucket
+    val res = ExtractPipeline.run(spark, Corpus.pages(spark, N).repartition(7), out,
+      ExtractPipeline.Config(mode = "force", runId = "q1", nBuckets = 16))
+    val files = quarantineFilesPerBucket(out)
+    assert(files.nonEmpty && files.values.forall(_ == 1), files)
+    assert(spark.read.parquet(res.quarantinePath).count() == res.quarantined)
+    // a resume rewrites only the not-done buckets, still one file each
+    val out2 = tmp()
+    val cfg = ExtractPipeline.Config(mode = "cli", runId = "q2", nBuckets = 16, commitGroups = 4)
+    intercept[IllegalStateException] {
+      ExtractPipeline.run(spark, Corpus.pages(spark, N).repartition(7), out2,
+        cfg.copy(failAfterGroups = Some(3)))
+    }
+    val res2 = ExtractPipeline.run(spark, Corpus.pages(spark, N).repartition(7), out2,
+      cfg.copy(runId = "q3"))
+    val files2 = quarantineFilesPerBucket(out2)
+    assert(files2.nonEmpty && files2.values.forall(_ == 1), files2)
+    assert(res2.quarantined == res.quarantined, res2)
+  }
+
+  test("Spark job count of a 4-group cli resume is pinned (metadata work does not grow)") {
+    val cfg = ExtractPipeline.Config(mode = "cli", runId = "j0", nBuckets = 16, commitGroups = 4)
+    val out = tmp()
+    intercept[IllegalStateException] {
+      ExtractPipeline.run(spark, Corpus.pages(spark, N), out, cfg.copy(failAfterGroups = Some(3)))
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    drainListenerBus() // no earlier event may reach the counter
+    spark.sparkContext.addSparkListener(listener)
+    val res = try {
+      val r = ExtractPipeline.run(spark, Corpus.pages(spark, N), out, cfg.copy(runId = "j1"))
+      drainListenerBus()
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(res.resumedBuckets == 12, res)
+    // 4 groups of one bucket each; the count is exact so that a new per-group
+    // or per-commit metadata job shows up here
+    assert(jobs.get() == 39, s"${jobs.get()} Spark jobs, want 39")
+  }
+
   test("legacy lineage (no committed_utc_ms/err_count) still resumes, compacts and summarizes") {
     val out = tmp()
     val res = ExtractPipeline.run(spark, Corpus.pages(spark, N), out,
